@@ -19,5 +19,7 @@ def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-REF_XML = "/root/reference/test/PurchaseOrder.xml"
-REF_XSD = "/root/reference/test/PurchaseOrder.xsd"
+# the W3C XML Schema primer's purchase order document and schema
+_DATA = os.path.join(os.path.dirname(__file__), "data")
+REF_XML = os.path.join(_DATA, "PurchaseOrder.xml")
+REF_XSD = os.path.join(_DATA, "PurchaseOrder.xsd")

@@ -1,11 +1,12 @@
 """Golden parity tests for the XML→Parquet conversion surface.
 
-Golden rows are the reference's documented outputs
-(/root/reference/README.md:120, :168, :178) — the de-facto golden files per
-SURVEY.md §5.
+Golden rows are the reference's documented outputs (its README.md:120,
+:168, :178) — the de-facto golden files per SURVEY.md §5 — for the W3C
+schema primer's purchase order in ``tests/data/``.
 """
 
 import gzip
+import io
 import json
 import os
 import shutil
@@ -17,7 +18,12 @@ from pyspark.sql import functions as F
 
 from tests.conftest import REF_XML, REF_XSD
 from xml_to_parquet_spark import convert, read_xml_documents
-from xml_to_parquet_spark.sources.xml_source import output_base, read_xml_archives
+from xml_to_parquet_spark.sources.xml_source import (
+    convert_archives_to_dataset,
+    convert_to_dataset,
+    output_base,
+    read_xml_archives,
+)
 from xml_to_parquet_spark.sources.xsd import UnsupportedXsdType, load_xsd_struct
 
 GOLDEN_FULL = json.loads(
@@ -185,6 +191,7 @@ def test_output_naming():
     assert output_base("/a/x.xml.gz", "/t").endswith("/t/x")
     assert output_base("/a/x.tar.gz", "/t").endswith("/t/x")
     assert output_base("/a/x.zip", "/t").endswith("/t/x")
+    assert output_base("/a/x.tgz", "/t").endswith("/t/x")
 
 
 def test_convert_writes_one_parquet_per_input(spark, tmp_path):
@@ -425,8 +432,6 @@ def test_convert_and_dataset_paths_agree(spark, tmp_path):
     """The compat path (one parquet per input) and the scale path (one
     partitioned dataset) must produce identical document sets for the
     same inputs."""
-    from xml_to_parquet_spark.sources.xml_source import convert_to_dataset
-
     src = tmp_path / "in"
     out1 = tmp_path / "per_file"
     out2 = tmp_path / "dataset"
@@ -434,6 +439,7 @@ def test_convert_and_dataset_paths_agree(spark, tmp_path):
     out1.mkdir()
     for i in range(3):
         shutil.copy(REF_XML, src / f"{i}.xml")
+    (src / "bad.xml").write_text("<purchaseOrder><unclosed>")
     written = convert(spark, str(src / "*.xml"), REF_XSD, target_path=str(out1))
     assert len(written) == 3
     convert_to_dataset(spark, str(src / "*.xml"), REF_XSD, str(out2))
@@ -443,3 +449,136 @@ def test_convert_and_dataset_paths_agree(spark, tmp_path):
     a = sorted(r[0] for r in per_file.select(F.to_json(F.struct("*"))).collect())
     b = sorted(r[0] for r in dataset.select(F.to_json(F.struct("*"))).collect())
     assert a == b
+
+
+def _tar_bytes(members):
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w:gz") as tf:
+        for name, body in members:
+            ti = tarfile.TarInfo(name)
+            ti.size = len(body)
+            tf.addfile(ti, io.BytesIO(body))
+    return buf.getvalue()
+
+
+def _zip_bytes(members):
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, body in members:
+            zf.writestr(name, body)
+    return buf.getvalue()
+
+
+def _parquet_docs(path):
+    """Rows of one output file as dicts. Read with pyarrow: Hadoop paths
+    cannot hold some legal member names (``:``)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pylist()
+
+
+def test_convert_tgz_names_outputs_by_member(spark, tmp_path):
+    """A .tgz is read as a tar (not as XML) and named like a .tar.gz."""
+    body = open(REF_XML, "rb").read()
+    tgz = tmp_path / "orders.tgz"
+    tgz.write_bytes(_tar_bytes([("a.xml", body)]))
+    out = tmp_path / "out"
+    out.mkdir()
+    written = convert(spark, [str(tgz)], REF_XSD, target_path=str(out))
+    assert [os.path.basename(w) for w in written] == ["orders.a.xml.parquet"]
+    assert _row_json(spark.read.parquet(written[0])) == GOLDEN_FULL
+
+
+def test_convert_member_names_spark_escapes_come_back_exact(spark, tmp_path):
+    """Member names with characters Spark escapes in partition directory
+    names (``=``, ``%``, ``#``, ``:``, ``?``), spaces and non-ASCII letters
+    name the outputs exactly."""
+    body = open(REF_XML, "rb").read()
+    names = ["a b=c%20.xml", "ü#x:1.xml", "q?.xml"]
+    zp = tmp_path / "odd.zip"
+    zp.write_bytes(_zip_bytes([(n, body) for n in names]))
+    out = tmp_path / "out"
+    out.mkdir()
+    written = convert(spark, [str(zp)], REF_XSD, target_path=str(out))
+    want = sorted(f"odd.{n}.parquet" for n in names)
+    assert sorted(os.path.basename(w) for w in written) == want
+    assert sorted(os.listdir(out)) == want
+    for w in written:
+        assert len(_parquet_docs(w)) == 1
+
+
+def test_convert_tar_duplicate_member_names_share_one_output(spark, tmp_path):
+    body = open(REF_XML, "rb").read()
+    tp = tmp_path / "dup.tar.gz"
+    tp.write_bytes(_tar_bytes([("same.xml", body), ("same.xml", body)]))
+    out = tmp_path / "out"
+    out.mkdir()
+    written = convert(spark, [str(tp)], REF_XSD, target_path=str(out))
+    assert [os.path.basename(w) for w in written] == ["dup.same.xml.parquet"]
+    assert len(_parquet_docs(written[0])) == 2
+
+
+def test_convert_delete_xml_removes_only_converted_inputs(spark, tmp_path):
+    src = tmp_path / "in"
+    src.mkdir()
+    shutil.copy(REF_XML, src / "good.xml")
+    (src / "bad.xml").write_text("<purchaseOrder><unclosed>")
+    out = tmp_path / "out"
+    out.mkdir()
+    written = convert(spark, str(src / "*.xml"), REF_XSD, target_path=str(out),
+                      delete_xml=True)
+    assert [os.path.basename(w) for w in written] == ["good.xml.parquet"]
+    assert os.listdir(src) == ["bad.xml"]
+
+
+@pytest.mark.parametrize(
+    "kind,ext,pack", [("tar", "tar.gz", _tar_bytes), ("zip", "zip", _zip_bytes)]
+)
+def test_archive_dataset_skips_corrupt_archive(spark, tmp_path, kind, ext, pack):
+    """A truncated archive in the batch is logged and skipped; the good
+    archive's members are still written."""
+    body = open(REF_XML, "rb").read()
+    good = pack([("a.xml", body), ("b.xml", body)])
+    (tmp_path / f"good.{ext}").write_bytes(good)
+    (tmp_path / f"bad.{ext}").write_bytes(good[: len(good) // 2])
+    out = tmp_path / "ds"
+    convert_archives_to_dataset(spark, str(tmp_path / f"*.{ext}"), REF_XSD, kind, str(out))
+    rows = spark.read.parquet(str(out)).select("_src", "_member").collect()
+    assert sorted(map(tuple, rows)) == [(f"good.{ext}", "a.xml"), (f"good.{ext}", "b.xml")]
+
+
+def test_document_dataset_skips_truncated_gz(spark, tmp_path):
+    data = gzip.compress(open(REF_XML, "rb").read())
+    (tmp_path / "good.xml.gz").write_bytes(data)
+    (tmp_path / "bad.xml.gz").write_bytes(data[: len(data) // 2])
+    out = tmp_path / "ds"
+    convert_to_dataset(spark, str(tmp_path / "*.xml.gz"), REF_XSD, str(out))
+    df = spark.read.parquet(str(out))
+    assert [r["_src"] for r in df.select("_src").collect()] == ["good.xml.gz"]
+    assert _row_json(df.drop("_src")) == GOLDEN_FULL
+
+
+def test_convert_is_one_spark_job_per_input(spark, tmp_path):
+    """Every input kind, however many members it holds, converts in ONE
+    Spark job: the partitioned write (no count, collect or per-member
+    write jobs)."""
+    body = open(REF_XML, "rb").read()
+    src = tmp_path / "in"
+    src.mkdir()
+    shutil.copy(REF_XML, src / "plain.xml")
+    (src / "doc.xml.gz").write_bytes(gzip.compress(body))
+    (src / "three.tar.gz").write_bytes(
+        _tar_bytes([(f"{i}.xml", body) for i in range(3)])
+    )
+    (src / "three.zip").write_bytes(_zip_bytes([(f"{i}.xml", body) for i in range(3)]))
+    out = tmp_path / "out"
+    out.mkdir()
+    sc = spark.sparkContext
+    try:
+        for name in sorted(os.listdir(src)):
+            group = f"convert-{name}"
+            sc.setJobGroup(group, group)
+            assert convert(spark, [str(src / name)], REF_XSD, target_path=str(out))
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

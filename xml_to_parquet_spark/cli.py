@@ -22,6 +22,8 @@ import argparse
 import logging
 import sys
 
+from xml_to_parquet_spark.sources.xml_source import file_kind
+
 
 def build_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(description="XML To Parquet Parser (Spark)")
@@ -70,24 +72,10 @@ def build_parser() -> argparse.ArgumentParser:
         type=int,
         metavar="N",
         help="with --dataset: repartition archive members across N tasks "
-        "before XML parsing (defaults to spark.sql.shuffle.partitions)",
+        "before XML parsing (default: no repartition, one task per archive)",
     )
     parser.add_argument("input_files", nargs=argparse.REMAINDER, help="files to convert")
     return parser
-
-
-_ARCHIVE_EXTS = {
-    ".tar": "tar", ".tar.gz": "tar", ".tgz": "tar", ".zip": "zip",
-}
-
-
-def _file_kind(path: str) -> str:
-    """'tar' | 'zip' | 'plain' from the extension of one input file."""
-    low = path.lower()
-    for ext, kind in _ARCHIVE_EXTS.items():
-        if low.endswith(ext):
-            return kind
-    return "plain"
 
 
 def _detect_archive_format(paths: list[str]) -> str | None:
@@ -96,7 +84,7 @@ def _detect_archive_format(paths: list[str]) -> str | None:
     out here on the driver with a clear message instead of routing every
     input through one archive reader and failing executor-side with an
     opaque per-member error (ADVICE r5)."""
-    kinds = {p: _file_kind(p) for p in paths}
+    kinds = {p: file_kind(p) for p in paths}
     distinct = set(kinds.values())
     if distinct <= {"plain"}:
         return None

@@ -886,9 +886,8 @@ def mm_caption_dedup(spark, sf_dir):
     documents FileScans, one of them id-only for the phash tier; both
     caption passes gone from the served plan). Feature values on the
     surviving docs are byte-identical — pruning only removes rows the
-    inner joins dropped. Interleaved A/B at sf0.1: XX_AB_PLACEHOLDER.
-    At 100 TB this is the §8 lesson verbatim: never tokenize a corpus to
-    serve a collision-pair-sized decision set."""
+    inner joins dropped. At 100 TB this is the §8 lesson verbatim: never
+    tokenize a corpus to serve a collision-pair-sized decision set."""
     from xml_to_parquet_spark.functions.text_fns import (
         TOKENS_SQL,
         shingles_sql,

@@ -837,10 +837,10 @@ def dedup_semdedup(spark, sf_dir):
 
     r17-opt (guide §2.4, VERDICT r16 #1 re-litigation): the r7 rejection
     "lineage cut via localCheckpoint — slower, serializes the reuse"
-    predates the round-16 materialize() device; re-measured under the
-    interleaved protocol the barrier now wins: XX_AB_PLACEHOLDER
-    (before-plan 4 FileScans — the assignment subtree built once per
-    self-join side — after-plan 2)."""
+    predates the materialize() device, which builds the
+    assignment subtree once instead of once per self-join side
+    (before-plan 4 FileScans, after-plan 2); no timing is recorded for
+    the change."""
     assigned = materialize(semdedup_assigned(spark, sf_dir))
     x = assigned.alias("x")
     y = assigned.alias("y")
@@ -1016,10 +1016,9 @@ def sim_pipeline(spark, sf_dir):
     survivor table itself embeds the whole prune: before-plan 12
     FileScans). Two materialize() barriers — the corpus-sized assignment
     grid and the survivor subset — collapse that to ONE assignment pass
-    + ONE prune pass (after-plan: 2 FileScans). Interleaved A/B at
-    sf0.1: XX_AB_PLACEHOLDER (the r8-era "recompute is cheaper"
-    docstring trade predates the round-16 proof that compact-grid
-    checkpoints win; re-measured and reversed). At 100 TB the persisted-
+    + ONE prune pass (after-plan: 2 FileScans); no timing is recorded
+    for the change (the older "recompute is cheaper" docstring trade
+    predates compact-grid checkpoints). At 100 TB the persisted-
     index variant (sim_ivf_persist) remains the offline amortization
     path; both barriers hold ≤ corpus-row compact tables (checkpoint-
     width audit green)."""

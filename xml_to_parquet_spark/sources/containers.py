@@ -5,7 +5,8 @@ The reference iterates archive members in-process; Spark-first, we read the
 archives as ``binaryFile`` rows and expand members inside ``mapInPandas``,
 so at 100 TB each archive is one task and extraction runs on executors with
 no driver involvement. Corrupt zips are skipped with a log, matching the
-reference's ``testzip()`` guard (convert_xml_to_parquet.py:331-333).
+reference's ``testzip()`` guard (convert_xml_to_parquet.py:331-333); so
+are corrupt or truncated tars.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import io
 import logging
 import os
 import tarfile
+import zlib
 from collections.abc import Iterator
 from zipfile import BadZipFile, ZipFile
 
@@ -37,42 +39,53 @@ ZIP_INFO_SCHEMA = (
 _MEMBER_COLS = ["src", "member", "xml"]
 
 
+def _tar_rows(path: str, content: bytes) -> list[dict]:
+    base = os.path.basename(path)
+    rows = []
+    with tarfile.open(fileobj=io.BytesIO(content), mode="r") as tf:
+        for member in tf.getmembers():
+            if not member.isfile():
+                continue
+            info = member.get_info()
+            fh = tf.extractfile(member)
+            rows.append(
+                {
+                    "src": path,
+                    "member": member.name,
+                    "xml": fh.read().decode("utf-8", errors="replace"),
+                    "name": info["name"],
+                    "mode": info["mode"],
+                    "uid": info["uid"],
+                    "gid": info["gid"],
+                    "size": info["size"],
+                    "mtime": int(info["mtime"]),
+                    "chksum": info["chksum"],
+                    "type": (
+                        info["type"].decode()
+                        if isinstance(info["type"], bytes)
+                        else str(info["type"])
+                    ),
+                    "linkname": info["linkname"],
+                    "uname": info["uname"],
+                    "gname": info["gname"],
+                    "devmajor": info["devmajor"],
+                    "devminor": info["devminor"],
+                    "tarfile": base,
+                }
+            )
+    return rows
+
+
 def _expand_tar(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            base = os.path.basename(path)
-            with tarfile.open(fileobj=io.BytesIO(bytes(content)), mode="r") as tf:
-                for member in tf.getmembers():
-                    if not member.isfile():
-                        continue
-                    info = member.get_info()
-                    fh = tf.extractfile(member)
-                    rows.append(
-                        {
-                            "src": path,
-                            "member": member.name,
-                            "xml": fh.read().decode("utf-8", errors="replace"),
-                            "name": info["name"],
-                            "mode": info["mode"],
-                            "uid": info["uid"],
-                            "gid": info["gid"],
-                            "size": info["size"],
-                            "mtime": int(info["mtime"]),
-                            "chksum": info["chksum"],
-                            "type": (
-                                info["type"].decode()
-                                if isinstance(info["type"], bytes)
-                                else str(info["type"])
-                            ),
-                            "linkname": info["linkname"],
-                            "uname": info["uname"],
-                            "gname": info["gname"],
-                            "devmajor": info["devmajor"],
-                            "devminor": info["devminor"],
-                            "tarfile": base,
-                        }
-                    )
+            try:
+                rows += _tar_rows(path, bytes(content))
+            # a corrupt or truncated archive is skipped whole, like a corrupt
+            # zip; gzip/bz2 stream errors are OSErrors
+            except (tarfile.TarError, EOFError, OSError, zlib.error):
+                _logger.info("Tar File is Corrupt:%s", path)
         yield pd.DataFrame(
             rows,
             columns=_MEMBER_COLS

@@ -11,9 +11,10 @@ Parquet with the reference's output naming (:489-508).
 Scale design: one ``spark.read.format("xml")`` job covers millions of files
 (each file is a split; Spark's XML reader is StAX-streaming per record, the
 same O(document) memory as the reference's iterparse). Schema compiling
-happens once on the driver. The compat mode (one .parquet file per input,
-like the reference) is a thin loop for small N; the scale path is
-``convert_to_dataset`` — a single partitioned parquet dataset keyed by
+happens once on the driver. The compat mode (one .parquet file per input or
+archive member, like the reference) is one ``partitionBy("_member")`` write
+job per input whose partition files are renamed to the reference names; the
+scale path is ``convert_to_dataset`` — a single parquet dataset keyed by
 source file.
 """
 
@@ -22,7 +23,10 @@ from __future__ import annotations
 import glob
 import logging
 import os
+import shutil
+import tempfile
 from typing import Iterable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,10 +35,8 @@ from xml_to_parquet_spark.sources import containers as _containers
 from xml_to_parquet_spark.sources.xsd import (
     DATE_FMT,
     load_xsd_struct,
-    physical_type,
-    prune_schema,
+    read_schema,
     rebuild_expr,
-    root_element,
 )
 
 _logger = logging.getLogger(__name__)
@@ -46,14 +48,6 @@ _XML_OPTIONS = {
     "attributePrefix": "_",
     "mode": "PERMISSIVE",
 }
-
-
-def _compile(spark, xsd, root, xpaths, excludepaths):
-    raw = load_xsd_struct(spark, xsd)
-    name, dt = root_element(raw, root)
-    dt = physical_type(dt)
-    dt = prune_schema(name, dt, xpaths, excludepaths)
-    return name, dt
 
 
 _NS_DECL_RE = r'''\s+xmlns(:[A-Za-z0-9_.-]+)?\s*=\s*("[^"]*"|'[^']*')'''
@@ -84,13 +78,17 @@ def read_xml_documents(
     documents are read whole-file as text, namespace declarations and
     prefixes removed, then parsed with ``from_xml`` against the same
     schema. Spark's rowTag path (the default) requires the root tag to
-    match literally and keeps prefixed names."""
+    match literally and keeps prefixed names.
+
+    A file that cannot be read at all (a truncated .gz, say) is skipped
+    (``ignoreCorruptFiles``), so one bad input never fails a bulk job."""
     if isinstance(paths, str):
         paths = [paths]
-    name, dt = _compile(spark, xsd, root, xpaths, excludepaths)
+    name, dt = read_schema(load_xsd_struct(spark, xsd), root, xpaths, excludepaths)
     options = {**_XML_OPTIONS, "mode": mode}
+    reader = spark.read.option("ignoreCorruptFiles", "true")
     if strip_namespaces:
-        raw = spark.read.text(paths, wholetext=True).select(
+        raw = reader.text(paths, wholetext=True).select(
             F.regexp_replace(
                 F.regexp_replace("value", _NS_DECL_RE, ""), _NS_PREFIX_RE, r"$1"
             ).alias("xml"),
@@ -100,8 +98,7 @@ def read_xml_documents(
             F.from_xml("xml", dt, options).alias("_doc"), "_metadata"
         ).select("_doc.*", "_metadata")
     else:
-        reader = spark.read.format("xml").options(rowTag=name, **options).schema(dt)
-        df = reader.load(paths)
+        df = reader.format("xml").options(rowTag=name, **options).schema(dt).load(paths)
     cols = [rebuild_expr(F.struct(*[F.col(f.name) for f in dt.fields]), dt, name).alias(name)]
     if file_info:
         cols.append(
@@ -138,7 +135,7 @@ def read_xml_documents_stream(
 
     Returns a streaming DataFrame; pair with ``writeStream.format(
     "parquet")`` + checkpoint for an incremental conversion pipeline."""
-    name, dt = _compile(spark, xsd, root, xpaths, excludepaths)
+    name, dt = read_schema(load_xsd_struct(spark, xsd), root, xpaths, excludepaths)
     df = (
         spark.readStream.format("xml")
         .options(rowTag=name, **_XML_OPTIONS)
@@ -181,7 +178,7 @@ def read_xml_archives(
     the cluster — the right trade whenever members-per-archive >> archives."""
     if isinstance(paths, str):
         paths = [paths]
-    name, dt = _compile(spark, xsd, root, xpaths, excludepaths)
+    name, dt = read_schema(load_xsd_struct(spark, xsd), root, xpaths, excludepaths)
     members = _containers.expand_archives(spark, paths, kind)
     if parse_parallelism:
         members = members.repartition(parse_parallelism)
@@ -222,30 +219,28 @@ def _expand_inputs(inputs: Iterable[str]) -> list[str]:
     return sorted(out)
 
 
+_ARCHIVE_EXTS = {".tar": "tar", ".tar.gz": "tar", ".tgz": "tar", ".zip": "zip"}
+
+
+def file_kind(path: str) -> str:
+    """'tar' | 'zip' | 'plain' from the extension of one input file: which
+    reader it needs (plain covers .xml and .gz documents)."""
+    low = path.lower()
+    for ext, kind in _ARCHIVE_EXTS.items():
+        if low.endswith(ext):
+            return kind
+    return "plain"
+
+
 def output_base(input_file: str, target_path: str | None = None) -> str:
     """Reference output naming (convert_xml_to_parquet.py:489-508): strip
-    .gz/.tar/.zip/.xml suffixes in order, then resolve against target dir
-    (or the input's own dir)."""
+    .tgz/.gz/.tar/.zip/.xml suffixes in order, then resolve against target
+    dir (or the input's own dir)."""
     path, base = os.path.split(os.path.realpath(input_file))
-    for suffix in (".gz", ".tar", ".zip", ".xml"):
+    for suffix in (".tgz", ".gz", ".tar", ".zip", ".xml"):
         if base.endswith(suffix):
             base = base[: -len(suffix)]
     return os.path.join(target_path or path, base)
-
-
-def _write_single_parquet(df: DataFrame, out_file: str) -> None:
-    """Write a DataFrame as ONE parquet file named ``out_file`` (the
-    reference emits a single file per input, not a directory)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="xml2pq_", dir=os.path.dirname(out_file) or ".")
-    try:
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        shutil.move(os.path.join(tmp, part), out_file)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def convert(
@@ -263,11 +258,18 @@ def convert(
     XML (or per archive member), same naming as convert_xml_to_parquet.py.
     Returns the list of output files written.
 
+    Each input is ONE Spark write job: its rows carry a ``_member`` column
+    (the archive member name; ``"xml"`` for a plain file, the file's stem
+    for a .gz), are written with ``partitionBy("_member")``, and each
+    partition's file is moved to ``<output_base>.<member>.parquet``.
+    Malformed documents and archive members are dropped, as the reference
+    does (convert_xml_to_parquet.py:231-236); an input left with no rows
+    is logged and skipped, and so is one whose conversion fails.
+
     The reference's size-ordered multiprocess pool (operator #12,
     :477-485, :510-524) is replaced by Spark's own task scheduler; the
-    explicit per-file loop here exists only to reproduce the one-file-per-
-    input naming contract. For bulk conversion at scale use
-    ``convert_to_dataset``.
+    per-input loop exists only to reproduce the one-file-per-input naming
+    contract. For bulk conversion at scale use ``convert_to_dataset``.
     """
     if target_path and not os.path.isdir(target_path):
         raise FileNotFoundError(f"invalid target_path: {target_path}")
@@ -276,50 +278,39 @@ def convert(
     written: list[str] = []
     for input_file in files:
         base = output_base(input_file, target_path)
+        kind = file_kind(input_file)
         try:
-            if input_file.endswith((".tar.gz", ".zip")):
-                kind = "tar" if input_file.endswith(".tar.gz") else "zip"
-                df = read_xml_archives(
-                    spark, input_file, xsd, kind, root, xpaths, excludepaths, file_info,
-                    drop_malformed=True,
-                ).persist()
-                try:
-                    # persist: parsed once, then the per-member filter+write
-                    # loop reads from cache instead of re-parsing per member
-                    for row in df.select("_member").distinct().collect():
-                        member_df = df.filter(F.col("_member") == row[0]).drop(
-                            "_src", "_member"
-                        )
-                        out = f"{base}.{row[0]}.parquet"
-                        _write_single_parquet(member_df, out)
-                        written.append(out)
-                finally:
-                    df.unpersist()
-            else:
-                # DROPMALFORMED + emptiness check = the reference's per-file
-                # behavior for undecodable XML (plain or .gz): log and skip,
-                # write nothing (convert_xml_to_parquet.py:231-236)
+            if kind == "plain":
                 df = read_xml_documents(
                     spark, input_file, xsd, root, xpaths, excludepaths, file_info,
                     mode="DROPMALFORMED",
-                ).persist()
-                try:
-                    # persist: count + write share one parse of the input
-                    if df.count() == 0:
-                        _logger.error("skipping %s: malformed XML", input_file)
-                        continue
-                    if input_file.endswith(".gz"):
-                        stem = os.path.basename(input_file)[:-3]
-                        out = f"{base}.{stem}.parquet"
-                    else:
-                        out = f"{base}.xml.parquet"
-                    _write_single_parquet(df, out)
-                    written.append(out)
-                finally:
-                    df.unpersist()
+                )
+                name = os.path.basename(input_file)
+                df = df.withColumn("_member", F.lit(name[:-3] if name.endswith(".gz") else "xml"))
+            else:
+                df = read_xml_archives(
+                    spark, input_file, xsd, kind, root, xpaths, excludepaths, file_info,
+                    drop_malformed=True,
+                ).drop("_src")
+            # the temp dir sits beside the outputs so the final moves are renames
+            with tempfile.TemporaryDirectory(prefix="xml2pq_", dir=os.path.dirname(base)) as tmp:
+                # coalesce(1): one task, so one part file per member
+                df.coalesce(1).write.mode("overwrite").partitionBy("_member").parquet(tmp)
+                outputs = []
+                for part_dir in sorted(glob.glob(os.path.join(glob.escape(tmp), "_member=*"))):
+                    # Spark escapes partition values (%XX) in directory names
+                    member = unquote(os.path.basename(part_dir)[len("_member="):])
+                    (part,) = glob.glob(os.path.join(glob.escape(part_dir), "part-*.parquet"))
+                    out = f"{base}.{member}.parquet"
+                    shutil.move(part, out)
+                    outputs.append(out)
         except Exception:  # reference swallows per-file errors and logs (:231-236)
             _logger.exception("failed to convert %s", input_file)
             continue
+        if not outputs:
+            _logger.error("skipping %s: no well-formed XML", input_file)
+            continue
+        written += outputs
         if delete_xml:
             os.remove(input_file)
         _logger.debug("Completed %s", input_file)
@@ -340,10 +331,12 @@ def convert_to_dataset(
     partitioned parquet dataset (source file recorded as a column). This is
     the shape you want at 100 TB — a million tiny per-file parquet outputs
     is an anti-pattern; a partitioned dataset keeps file counts sane and
-    lets downstream reads prune by source."""
+    lets downstream reads prune by source. Malformed documents are dropped,
+    as in ``convert``."""
     files = _expand_inputs(inputs)
     df = read_xml_documents(
-        spark, files, xsd, root, xpaths, excludepaths, file_info, source_col=True
+        spark, files, xsd, root, xpaths, excludepaths, file_info, source_col=True,
+        mode="DROPMALFORMED",
     )
     df.write.mode("overwrite").parquet(target)
 

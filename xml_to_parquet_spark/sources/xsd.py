@@ -249,6 +249,15 @@ def output_schema(dt: T.DataType, elem_name: str) -> T.DataType:
     return T.StructType(attrs + elems)
 
 
+def read_schema(
+    schema: T.StructType, root: str | None = None, xpaths=None, excludepaths=None
+) -> tuple[str, T.DataType]:
+    """Loaded XSD struct → (root name, read schema): the root element's
+    physical type, pruned to the include/exclude paths."""
+    name, dt = root_element(schema, root)
+    return name, prune_schema(name, physical_type(dt), xpaths, excludepaths)
+
+
 def xsd_to_spark_schema(
     spark: SparkSession,
     xsd: str,
@@ -262,8 +271,5 @@ def xsd_to_spark_schema(
     physical types, Spark ``_attr`` attribute names); ``output schema`` is
     the reference-parity shape after ``rebuild_expr``.
     """
-    raw = load_xsd_struct(spark, xsd)
-    name, dt = root_element(raw, root)
-    dt = physical_type(dt)
-    dt = prune_schema(name, dt, xpaths, excludepaths)
+    name, dt = read_schema(load_xsd_struct(spark, xsd), root, xpaths, excludepaths)
     return name, dt, output_schema(dt, name)
